@@ -186,9 +186,13 @@ class ReconPair:
                     ),
                 )
             )
+        # a keys-only pair has no arms: type the empty array (array<void>
+        # has no d.col_name to extract)
+        cell = "struct<col_name:string,src_val:string,tgt_val:string>"
+        diffs = F.array(*arms) if arms else F.array().cast(f"array<{cell}>")
         exploded = j.select(
             *[F.col(f"s.{k}").alias(k) for k in key],
-            F.explode(F.filter(F.array(*arms), lambda x: x.isNotNull())).alias("d"),
+            F.explode(F.filter(diffs, lambda x: x.isNotNull())).alias("d"),
         )
         return exploded.select(
             *key,
@@ -197,51 +201,55 @@ class ReconPair:
             F.col("d.tgt_val").alias("tgt_val"),
         )
 
-    def fingerprints(self) -> DataFrame:
-        """Per-column algebraic fingerprints for both sides, unpivoted to
-        (metric, src_val, tgt_val, diff, status) rows."""
+    def _fingerprint_vector(self, df: DataFrame) -> DataFrame:
+        """One side's per-column fingerprint metrics as a single row: the
+        plain metrics and the distinct counts as two 1-row aggregates,
+        cross-joined (the agg_approx "Expand avoidance" split — see
+        :meth:`summary`'s global tier)."""
+        plain = [F.count("*").cast("double").alias("row_count")]
+        distinct = []
+        for col, kind in self.compare_cols.items():
+            plain.append(
+                F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
+                .cast("double")
+                .alias(f"nulls__{col}")
+            )
+            distinct.append(
+                F.countDistinct(col).cast("double").alias(f"distinct__{col}")
+            )
+            if kind in ("int", "double"):
+                plain.append(money_sum(col, f"sum__{col}"))
+                plain.append(F.min(col).cast("double").alias(f"min__{col}"))
+                plain.append(F.max(col).cast("double").alias(f"max__{col}"))
+        fp = df.agg(*plain)
+        return fp.crossJoin(df.agg(*distinct)) if distinct else fp
 
-        def side_agg(df: DataFrame) -> DataFrame:
-            aggs = [F.count("*").cast("double").alias("row_count")]
-            for col, kind in self.compare_cols.items():
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
-                    .cast("double")
-                    .alias(f"nulls__{col}")
-                )
-                aggs.append(
-                    F.countDistinct(col).cast("double").alias(f"distinct__{col}")
-                )
-                if kind in ("int", "double"):
-                    aggs.append(money_sum(col, f"sum__{col}"))
-                    aggs.append(F.min(col).cast("double").alias(f"min__{col}"))
-                    aggs.append(F.max(col).cast("double").alias(f"max__{col}"))
-            return df.agg(*aggs)
-
-        s, t = side_agg(self.source), side_agg(self.target)
+    def _fingerprint_pairs(self) -> DataFrame:
+        """(metric, sval, tval): both sides' metric vectors unpivoted and
+        joined on the metric name."""
+        s = self._fingerprint_vector(self.source)
+        t = self._fingerprint_vector(self.target)
         metrics = s.columns
         stack = ", ".join(f"'{m}', `{m}`" for m in metrics)
 
         def unpivot(df: DataFrame, val: str) -> DataFrame:
             return df.selectExpr(f"stack({len(metrics)}, {stack}) as (metric, {val})")
 
-        j = unpivot(s, "sval").join(unpivot(t, "tval"), "metric")
+        return unpivot(s, "sval").join(unpivot(t, "tval"), "metric")
+
+    def fingerprints(self) -> DataFrame:
+        """Per-column algebraic fingerprints for both sides, unpivoted to
+        (metric, src_val, tgt_val, diff, status) rows."""
         # Null-safe status (r15, §7.7.2): a metric that is NULL on BOTH
         # sides (min/max/sum over an empty or all-null side) is equally
         # absent — MATCH, not the FP_DIFF the bare NULL comparison's
         # when/otherwise fell into; NULL on exactly one side stays a diff.
-        return j.select(
+        return self._fingerprint_pairs().select(
             "metric",
             dround("sval", 4).alias("src_val"),
             dround("tval", 4).alias("tgt_val"),
             dround(F.col("sval") - F.col("tval"), 4).alias("diff"),
-            F.when(
-                F.col("sval").eqNullSafe(F.col("tval"))
-                | (F.abs(F.col("sval") - F.col("tval")) < 1e-9),
-                "MATCH",
-            )
-            .otherwise("FP_DIFF")
-            .alias("status"),
+            F.when(_fp_match(), "MATCH").otherwise("FP_DIFF").alias("status"),
         )
 
     def drift(self, value_col: str, width: float, top_bucket: int = 9) -> DataFrame:
@@ -313,11 +321,15 @@ class ReconPair:
           keep the joins' never-match semantics via a null-side grouping
           column (each side's NULL-key group stays its own row, exactly as
           the distinct+anti-join and per-side groupBys treated them).
-        - **global tier** (count_diff_grains, fingerprint_diffs): one
-          aggregate pass per side (the fingerprints() metric vector, whose
-          row_count metric already carries the count check — integer
-          counts differ by ≥ 1, so the 1e-9 fingerprint tolerance and the
-          exact count comparison agree with the separate spellings).
+        - **global tier** (count_diff_grains, fingerprint_diffs): the
+          fingerprints() metric vector per side, whose row_count metric
+          already carries the count check (integer counts differ by ≥ 1,
+          so the 1e-9 fingerprint tolerance and the exact count comparison
+          agree with the separate spellings). Each side is TWO 1-row
+          aggregates, cross-joined: the plain metrics, and the distinct
+          counts alone. In one aggregate the distinct counts force Spark's
+          Expand rewrite, which drags all plain buffers through every
+          distinct group — the longest serial stage chain of the call.
 
         Each check's count is EXACTLY the row count of the corresponding
         standalone method's frame (pinned against the unfused spelling in
@@ -409,37 +421,7 @@ class ReconPair:
         )
 
         # --- global tier: the fingerprint metric vector carries both ----
-        def side_agg(df: DataFrame) -> DataFrame:
-            aggs = [F.count("*").cast("double").alias("row_count")]
-            for col, kind in self.compare_cols.items():
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0))
-                    .cast("double")
-                    .alias(f"nulls__{col}")
-                )
-                aggs.append(
-                    F.countDistinct(col).cast("double").alias(f"distinct__{col}")
-                )
-                if kind in ("int", "double"):
-                    aggs.append(money_sum(col, f"sum__{col}"))
-                    aggs.append(F.min(col).cast("double").alias(f"min__{col}"))
-                    aggs.append(F.max(col).cast("double").alias(f"max__{col}"))
-            return df.agg(*aggs)
-
-        sfp = side_agg(self.source)
-        metrics = sfp.columns
-        stack = ", ".join(f"'{m}', `{m}`" for m in metrics)
-
-        def unpivot(df: DataFrame, val: str) -> DataFrame:
-            return df.selectExpr(f"stack({len(metrics)}, {stack}) as (metric, {val})")
-
-        jfp = unpivot(sfp, "sval").join(
-            unpivot(side_agg(self.target), "tval"), "metric"
-        )
-        fp_match = F.col("sval").eqNullSafe(F.col("tval")) | (
-            F.abs(F.col("sval") - F.col("tval")) < 1e-9
-        )
-        fp_roll = jfp.agg(
+        fp_roll = self._fingerprint_pairs().agg(
             F.sum(
                 F.when(
                     (F.col("metric") == "row_count")
@@ -447,7 +429,7 @@ class ReconPair:
                     one,
                 ).otherwise(zero)
             ).alias("count_diff_grains"),
-            F.sum(F.when(fp_match, zero).otherwise(one)).alias(
+            F.sum(F.when(_fp_match(), zero).otherwise(one)).alias(
                 "fingerprint_diffs"
             ),
         )
@@ -471,6 +453,14 @@ class ReconPair:
             .localCheckpoint()
         )
         return report
+
+
+def _fp_match() -> Column:
+    """A fingerprint metric matches when equal (both-NULL included) or
+    within 1e-9."""
+    return F.col("sval").eqNullSafe(F.col("tval")) | (
+        F.abs(F.col("sval") - F.col("tval")) < 1e-9
+    )
 
 
 def _summary_oracle() -> str:

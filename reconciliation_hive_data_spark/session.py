@@ -10,6 +10,20 @@ builder is for our own tests and bench runs. Conf choices (SURVEY.md §4/§6):
   real cluster this is AQE-managed from ``initialPartitionNum``.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - Arrow enabled for any pandas-UDF path.
+- Python call-site capture off (``spark.python.sql.dataFrameDebugging.
+  enabled=false``). PySpark 4.1 wraps every ``F.*`` and ``Column`` call to
+  record the Python file:line that built it: each wrapped call walks the
+  stack, attempts an ``import ipykernel`` (which fails when IPython is
+  installed without it) and makes several py4j round trips. One
+  ``F.when(F.col(c).isNull(), 1).otherwise(0)`` took 7-11 ms to build with
+  it and 2.7-2.9 ms without (4-core VM, 2000 builds per run), and
+  ``ReconPair.summary()`` builds dozens of such expressions per call.
+  The cost: a Spark runtime error no longer names the Python line that
+  built the failing expression; its exception class and message are
+  unchanged. The setting lives in ``get_spark`` only, so a session the
+  caller builds itself (as for ``__spark_entry__``) keeps PySpark's
+  default; PySpark reads it once per process, from the first active
+  session.
 """
 
 from __future__ import annotations
@@ -58,6 +72,7 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", scan_min)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

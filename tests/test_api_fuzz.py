@@ -35,6 +35,15 @@ def fault_plan(draw):
 )
 @given(plan=fault_plan())
 def test_injected_faults_recovered_exactly(spark, sf_dir, plan):
+    _check_fault_census(spark, sf_dir, plan)
+
+
+def test_fixed_fault_plan_recovered_exactly(spark, sf_dir):
+    """One fixed plan of the soak fuzz above, in the default run."""
+    _check_fault_census(spark, sf_dir, (7, 21, 34, 55))
+
+
+def _check_fault_census(spark, sf_dir, plan):
     drop, dup, drift, null = plan
     orders = load(spark, sf_dir, "orders")
     key = F.col("o_orderkey")
@@ -70,22 +79,26 @@ def test_injected_faults_recovered_exactly(spark, sf_dir, plan):
             for row in orders.filter(key % MOD == r).select("o_orderkey").collect()
         }
 
+    dropped, duped = keys_with_residue(drop), keys_with_residue(dup)
+    drifted, nulled = keys_with_residue(drift), keys_with_residue(null)
+    assert dropped and duped and drifted and nulled, "every fault must hit keys"
     missing = {
         r.o_orderkey
         for r in pair.key_diff().filter("side = 'MISSING_IN_TARGET'").collect()
     }
-    assert missing == keys_with_residue(drop)
+    assert missing == dropped
 
     dups = {r.o_orderkey for r in pair.duplicate_keys().collect()}
-    assert dups == keys_with_residue(dup)
+    assert dups == duped
 
     cells = pair.cell_diff().collect()
-    assert {r.o_orderkey for r in cells if r.col_name == "o_totalprice"} == (
-        keys_with_residue(drift)
-    )
-    assert {r.o_orderkey for r in cells if r.col_name == "o_orderpriority"} == (
-        keys_with_residue(null)
-    )
+    assert {r.o_orderkey for r in cells if r.col_name == "o_totalprice"} == drifted
+    assert {r.o_orderkey for r in cells if r.col_name == "o_orderpriority"} == nulled
+
+    got = {r.check: r.violations for r in pair.summary().collect()}
+    assert got["keys_missing"] == len(dropped)
+    assert got["duplicate_keys"] == len(duped)
+    assert got["cell_diffs"] == len(drifted) + len(nulled)
 
 
 def test_null_double_with_tolerance_is_reported(spark, sf_dir):

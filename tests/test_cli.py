@@ -45,3 +45,38 @@ def test_cli_recon_clean_and_faulty(spark, sf_dir, capsys):
         "--check", "key_diff",
     ]
     assert main(args_diff) == 0
+
+
+def test_cli_recon_faulty_report_exits_1(spark, sf_dir, tmp_path):
+    """A faulty pair with --report exits 1 and writes exactly the 6 rows
+    ReconPair.summary() returns for the same pair."""
+    from reconciliation_hive_data_spark.catalog import load
+    from reconciliation_hive_data_spark.plans.api import ReconPair
+    from reconciliation_hive_data_spark.plans.recon import orders_target
+
+    src = f"{sf_dir}/orders.parquet"
+    tgt, out = str(tmp_path / "tgt"), str(tmp_path / "report")
+    orders = load(spark, sf_dir, "orders")
+    orders_target(orders, faulty=True).write.parquet(tgt)
+    compare = {"o_totalprice": "double", "o_orderpriority": "string"}
+    args = [
+        "recon",
+        "--source", src,
+        "--target", tgt,
+        "--keys", "o_orderkey",
+        "--compare", ",".join(f"{c}:{k}" for c, k in compare.items()),
+        "--tolerance", "0.5",
+        "--report", out,
+    ]
+    assert main(args) == 1
+    pair = ReconPair(
+        source=spark.read.parquet(src),
+        target=spark.read.parquet(tgt),
+        keys=["o_orderkey"],
+        compare_cols=compare,
+        tolerance=0.5,
+    )
+    written = sorted(spark.read.parquet(out).collect())
+    assert len(written) == 6
+    assert written == sorted(pair.summary().collect())
+    assert any(r.status == "DIFF" for r in written)

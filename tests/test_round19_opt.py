@@ -275,6 +275,28 @@ def test_summary_fused_empty_sides_all_match(spark):
     assert got == {c: 0 for c in _SUMMARY_CHECKS}
 
 
+def test_summary_keys_only_pair_matches_unfused(spark):
+    # compare_cols={}: the fingerprint vector has no distinct counts (no
+    # empty df.agg()), and cell_diff() has no arms to explode
+    from reconciliation_hive_data_spark.plans.api import ReconPair
+
+    src = [_row(1), _row(2), _row(2), _row(None), _row(7)]
+    tgt = [_row(1), _row(3), _row(3), _row(None), _row(None), _row(8)]
+
+    def mk():
+        return ReconPair(
+            source=_frame(spark, src),
+            target=_frame(spark, tgt),
+            keys=["o_orderkey"],
+            compare_cols={},
+        )
+
+    got = _fused_summary_counts(mk())
+    assert got == _unfused_summary_counts(mk())
+    assert got["keys_missing"] > 0 and got["fingerprint_diffs"] > 0
+    assert got["cell_diffs"] == 0 and got["row_hash_diffs"] == 0
+
+
 # ---------------------------------------------------------------------------
 # sketch_kmv single-pass rewrite: bit-identical to the TakeOrdered spelling
 # ---------------------------------------------------------------------------

@@ -98,3 +98,42 @@ def test_stateful_v2_registers_and_matches_batch_when_available(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_udtf_apply_gap_is_compared_at_microsecond_precision(spark, tmp_path):
+    """udtf_apply's 30-min gap test must see fractional seconds, as its
+    oracle's epoch(ts) does. Truncating both ends to whole seconds turned
+    a 1800.5 s gap (1000.2 s → 2800.7 s) and a 1800 s + 1 µs gap into
+    1800 s, so no second session opened."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from reconciliation_hive_data_spark import registry
+
+    from .parity import compare
+
+    base = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z in µs
+    events = [  # (user_id, offset_us)
+        (1, 1_000_200_000), (1, 2_800_700_000),  # gap 1800.5 s → 2 sessions
+        (2, 5_000_000_000), (2, 6_800_000_000),  # gap 1800 s exactly → 1
+        (3, 9_000_000_000), (3, 10_800_000_001),  # gap 1800 s + 1 µs → 2
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(events)), pa.int64()),
+                "ts": pa.array([base + off for _, off in events], pa.timestamp("us")),
+                "user_id": pa.array([u for u, _ in events], pa.int64()),
+                "event_type": pa.array(["click"] * len(events), pa.string()),
+                "value": pa.array([1.0] * len(events), pa.float64()),
+                "props": pa.array(["{}"] * len(events), pa.string()),
+            }
+        ),
+        f"{tmp_path}/events.parquet",
+    )
+    registry.load_all_modules()
+    spec = registry.get("udtf_apply")
+    df = spec.fn(spark, str(tmp_path))
+    got = {r.user_id: (r.n_sessions, r.n_events) for r in df.collect()}
+    assert got == {1: (2, 2), 2: (1, 2), 3: (2, 2)}
+    assert not compare(df, spec.oracle, str(tmp_path), "udtf_apply")
