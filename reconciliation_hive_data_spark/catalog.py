@@ -98,11 +98,10 @@ _RELATION_CACHE_MAX = 512
 
 
 def _path_sig(path: str) -> tuple:
-    """Stat signature of a fixture path. For directory datasets the
-    per-entry stats ride along (a Spark overwrite rewrites part files in a
-    recreated dir, so either the dir inode or the entry list changes); the
-    entry walk is capped — past the cap we fall back to the dir stat alone,
-    which still catches the recreate-the-dir overwrite pattern."""
+    """Stat signature of a fixture path. A directory dataset folds the stats
+    of ALL its entries into (dir mtime, entry count, total size, newest entry
+    mtime): recreating the dir, adding or removing a part file, and rewriting
+    any part file in place each change it."""
     try:
         st = os.stat(path)
     except OSError:
@@ -110,14 +109,16 @@ def _path_sig(path: str) -> tuple:
         return ("missing",)
     if not os.path.isdir(path):
         return (st.st_mtime_ns, st.st_size)
-    entries: list[tuple] = []
-    for nm in sorted(os.listdir(path))[:64]:
-        try:
-            est = os.stat(os.path.join(path, nm))
-        except OSError:
-            continue
-        entries.append((nm, est.st_size, est.st_mtime_ns))
-    return (st.st_mtime_ns, tuple(entries))
+    count = total = newest = 0
+    with os.scandir(path) as entries:
+        for entry in entries:
+            try:
+                est = entry.stat()
+            except OSError:
+                continue
+            count, total = count + 1, total + est.st_size
+            newest = max(newest, est.st_mtime_ns)
+    return (st.st_mtime_ns, count, total, newest)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

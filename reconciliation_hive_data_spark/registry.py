@@ -5,6 +5,11 @@ decorator: a name, a ``(spark, sf_dir) -> DataFrame`` callable, and (when the
 semantics are ANSI-SQL-expressible) the DuckDB oracle SQL string the driver
 runs side-by-side. Registration happens at import time; ``load_all_modules``
 imports every operator module exactly once.
+
+``ordered_names()`` orders the queries for an external correctness sweep
+with a bounded budget. One rule queues a verified query for re-verification:
+its ``ORACLE_SNAPSHOT.json`` entry is missing, or the entry's oracle hash or
+code fingerprint differs from the current one.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import codehash
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -58,420 +65,12 @@ _MODULES = (
     "reconciliation_hive_data_spark.sources.python_ds",
 )
 
-# Queries whose physical plan was rewritten after their most recent external
-# verification row, keyed to the round of the rewrite.  They sort ahead of
-# unmodified already-verified queries (least-recently-verified first) until
-# a row at-or-after the rewrite round exists, then fall back into the
-# normal rotation automatically.
-_MODIFIED_IN_ROUND: dict[str, int] = {
-    "join_asof": 2,          # linear window plan replaced the join-based plan
-    "join_self": 2,          # composite (user_id, bucket) equi-join key added
-    # (x_dedup_embed r7 coord-bucket rewrite superseded by the r12 entry
-    # below — single entry at the max round)
-    # (s_stateful_custom r3 vectorized-accumulator rewrite superseded by
-    # the r12 entry below — single entry at the max round, as with
-    # x_dedup_clusters)
-    # (x_decontaminate r3 / x_dedup_near r5 / x_dedup_simhash r5 /
-    # x_dedup_simhash_banded r5 entries superseded by the r18 single-scan
-    # batch below — single entry at the max round)
-    # (recon_api_summary r5 persisted-sides rewrite superseded by the r15
-    # entry below — single entry at the max round)
-    "join_range": 5,              # stats-sized grid replaced the fixed 1-hour grid
-    "x_text_repetition": 5,       # bound token column + sorted-run top count
-    "udtf_lateral": 5,            # Arrow-batched UDTF evaluation (useArrow)
-    # (x_dedup_clusters r5 checkpointed edge list / r9 connected_components
-    # factoring superseded by the r18 single-scan entry below — single
-    # entry at the max round)
-    # (recon_crossformat r6 fingerprinted-ORC-artifact rewrite superseded
-    # by the r15 entry below — single entry at the max round)
-    # (x_knn_graph r8 half-pair rewrite superseded by the r12 entry below)
-    # µs-exact session-gap comparison replaced the whole-second cast('long')
-    # truncation (ADVICE r9): boundary gaps in (1800 s, 1801 s) could flip
-    # sessions vs the oracles' `> INTERVAL 30 MINUTE`; fixture-identical on
-    # all three sf dirs (verified r10) but fronted anyway per the rewrite rule
-    "win_sessionize": 10,
-    "x_attribution": 10,
-    # r10: all-null row groups carry no footer min/max — the reader crashed
-    # on float(None); emits null + null-safe compare.  r11: explicit
-    # per-row-group rg_unknown flag forces INCONSISTENT for stats-less
-    # non-empty groups that the null-skipping rollups would silently drop
-    # (ADVICE r10) — a semantic change to the `consistent` verdict, so the
-    # r10 driver row no longer attests the current plan; fronted per the
-    # rewrite rule (win_sessionize precedent above).
-    "recon_footer_stats": 11,
-    # r12 aggregate fuzz: a zero-variance group whose money value is not
-    # binary-exact (e.g. one 999.99 price) cancels the exact-decimal sum
-    # of squares against the double-rounded square of sums to ~-1e-10;
-    # Spark's sqrt(neg) silently NaN'd while DuckDB's sqrt ERRORED the
-    # oracle outright. Both plan and oracle now clamp the co-moment with
-    # greatest(...,0) before sqrt — fixture-identical (variances there are
-    # large positive) but fronted per the rewrite rule.
-    "agg_corr": 12,
-    "agg_stats": 12,
-    "x_doc_outliers": 12,  # same clamp, same bug class (z-score denominator)
-    # r12 embeddings fuzz: a zero-norm vector ANSI-aborted every cosine
-    # query (plain `/` on dot/(na*nb)) and a zero-range corpus aborted
-    # the global quantizer's grid division; all now try_divide → NULL,
-    # matching DuckDB's x/0 convention (NULL falls out of the >= filters
-    # and both engines' null-skipping least()). Fixture has no degenerate
-    # vectors → results identical there; fronted per the rewrite rule.
-    # (x_dedup_embed / x_embed_quantize / x_sim_ivf r12 try_divide entries
-    # superseded by the r13 entries below — single entry at max round)
-    "x_sim_search": 12,
-    "x_sim_pairs": 12,
-    "x_knn_graph": 12,
-    # r12 scalar-function fuzz: (a) parse_url ABORTED the job on one
-    # RFC-invalid URL and parse_json/variant_get on one malformed or
-    # non-castable props value — all now try_* → NULL per row; (b)
-    # fn_string's strict concat NULLed seg_trimmed for a NULL segment
-    # where the skip-null convention (and the oracle's concat) yields ''
-    # — now concat_ws, plus an oracle IS NULL guard for DuckDB's
-    # split_part('' for NULL input) quirk. Fixture-identical (well-formed
-    # URLs/JSON, no NULL segments); fronted per the rewrite rule.
-    "fn_url": 12,
-    # (fn_variant r12 try_* hardening superseded by the r15 exact-sum entry
-    # below — single entry at the max round)
-    "fn_string": 12,
-    # (c) fn_struct's whole-struct compare: Spark struct ``==`` inherits
-    # ordering semantics (NULL fields equal) while DuckDB ``=`` is
-    # three-valued — a NULL total_cents made is_open TRUE here, NULL
-    # there. Both sides now spell null-safe equality (eqNullSafe /
-    # IS NOT DISTINCT FROM), which the engines agree on row-for-row and
-    # which a two-valued match verdict wants. Fixture has no NULL struct
-    # fields → results identical there; fronted per the rewrite rule.
-    "fn_struct": 12,
-    # r12 relational fuzz, second pass: an event_type whose values sum to
-    # exactly 0 made value/type_sum ANSI-abort the whole salted join; the
-    # same class hit x_doc_outliers' z-score when a language group has
-    # exactly zero length-variance (σ = 0). Both now try_divide → NULL,
-    # DuckDB's x/0 answer (x_doc_outliers was already fronting this round
-    # for the negative-cancellation clamp; join_skew_salted is new here).
-    "join_skew_salted": 12,
-    # r12 streaming fuzz: a null-valued event crashed the stateful
-    # accumulator (NaN → int64 micro-unit cast raises, aborting the
-    # stream); nulls now split SQL-style — n_events counts every row,
-    # max/sum skip nulls and emit NULL when no non-null value exists.
-    # State schema gained the non-null counter. Fixture null-free →
-    # results identical there, fronted per the rewrite rule.
-    "s_stateful_custom": 12,
-    # r13: the two TPC-H ratio queries carried the exact abort class r12
-    # closed in the similarity family — a plain ANSI `/` over an aggregate
-    # denominator that legal data (100%-discount months/years) can drive to
-    # exactly 0, killing the job where the DuckDB oracle's 0/0 is NULL.
-    # The r12 full-suite fuzz (tests/test_round12_tpchfull_properties.py)
-    # falsified q14 deterministically; q8 had the identical shape by
-    # inspection. Both now F.try_divide. Fixture months/years have nonzero
-    # revenue → results identical there; fronted per the rewrite rule.
-    "tpch_q14": 13,
-    "tpch_q8": 13,
-    # r13 hostile-documents fuzz: a NULL-text delta doc (NULL md5) slipped
-    # through the null-unsafe anti-join and was ADMITTED where the oracle's
-    # three-valued NOT IN rejects it; the plan now quarantines NULL
-    # fingerprints before the join. Fixture has no NULL text → identical
-    # there; fronted per the rewrite rule.
-    "x_dedup_incremental": 13,
-    # r13 embeddings fuzz (NaN/±Inf components): (a) x_dedup_embed — each
-    # engine's NaN-is-greatest comparison admitted a DIFFERENT NaN-cosine
-    # pair subset; both sides now exclude NaN cosines ("incomparable",
-    # the zero-norm verdict). (b) the two quantizers — Spark's floor
-    # Java-casts NaN to code 0 where DuckDB's LEAST clamps NaN to 255;
-    # NaN now routes through nanvl→NULL to the shared 255 clamp. Fixture
-    # has no NaN/Inf → identical there; fronted per the rewrite rule.
-    # (x_dedup_embed's r13 entry superseded by the r18 single-scan entry
-    # below — single entry at the max round)
-    "x_embed_quantize": 13,
-    "x_embed_quantize_perdim": 13,
-    # r13 embeddings fuzz, robustness domain: an empty or truncated vector
-    # ABORTED x_sim_ivf's ordinal embedding[i-1] access with
-    # INVALID_ARRAY_INDEX; get() now yields NULL for missing dims (sign
-    # bit 0, the oracle's convention). Fixture is uniformly dim-64 →
-    # identical there; fronted per the rewrite rule.
-    "x_sim_ivf": 13,
-    # r13 CSV content fuzz: the default CSV writer/reader options silently
-    # corrupted hostile-but-legal strings on the round trip (an embedded
-    # newline split a row into a truncated row + a phantom NULL-keyed row;
-    # '' came back NULL; padding was trimmed ON WRITE). sink_csv now
-    # carries the hardened option set (multiLine read, whitespace
-    # preservation, \N null sentinel). Fixture props are newline-free
-    # single-line JSON → results identical there; fronted per the rule.
-    # (r13 entry superseded by the r14 one below — single entry at max
-    # round, the x_dedup_clusters convention.)
-    # r14 events fuzz (VERDICT r13 item 3) — five plan rewrites, all
-    # fixture-identical (fixture events have dense non-negative ids,
-    # well-formed '{"k": n}' props, no NULL keys), fronted per the rule:
-    # - agg_mode / x_zorder: NULLS LAST pinned in the rank/ntile windows
-    #   (engines' bare-ASC NULL defaults are opposite; a NULL-keyed tie
-    #   elected a different modal winner / shifted every file assignment).
-    # - s_checkpoint_resume: the two staging filters now PARTITION the
-    #   table (pmod + complement-keeps-NULL); C-style `% 2 == 0/1` dropped
-    #   negative- and NULL-id rows from BOTH batches.
-    # - fn_map_json: non-integral-number k carved from k_str into a
-    #   bit-exact DOUBLE k_num (engines re-serialize 1e20 differently);
-    #   schema gained a column.
-    # - sink_csv / fn_variant: try_cast/try_sum on the extracted k — a
-    #   '{"k": "abc"}' row ANSI-aborted the sink job, and an int64-max k
-    #   ANSI-aborted SUM where DuckDB's HUGEINT-internal sum succeeds.
-    "agg_mode": 14,
-    "x_zorder": 14,
-    "s_checkpoint_resume": 14,
-    # (fn_map_json's r14 strict-typing entry superseded by the r19
-    # single-parse entry below — single entry at the max round)
-    # fn_variant / sink_csv r14 try_cast/try_sum hardening superseded by
-    # the r15 exact-sum rewrite (ADVICE r14): try_sum NULLed on PARTIAL
-    # int64 overflow — partition-order-dependent for a mixed-sign group
-    # whose true sum fits — where the oracle's HUGEINT-internal SUM NULLs
-    # only on true-sum overflow; both now sum exactly in DECIMAL(38,0)
-    # and try_cast the total, landing on the oracle's NULL condition.
-    # Fixture k values are small positives → results identical there;
-    # fronted per the rewrite rule (single entry at the max round).
-    "fn_variant": 15,
-    "sink_csv": 15,
-    # r14 ASC-null-order audit (generalizing the agg_mode/x_zorder find:
-    # Spark bare-ASC is nulls-FIRST, DuckDB nulls-LAST — probed; DESC
-    # agrees by accident). Audit of every value-affecting orderBy found
-    # two latent sites, both fixture-identical, fronted per the rule:
-    # win_ntile (the one §2e window ordering ASC on a nullable column —
-    # o_totalprice; now asc_nulls_last both engines) and sketch_kmv
-    # (NULL custkey → NULL h sorted INTO Spark's k-smallest sketch but
-    # not DuckDB's; NULL keys now excluded from the key universe on both
-    # sides, matching COUNT(DISTINCT)'s treatment; kmv already fronting
-    # r14 for the try_divide fix).
-    "win_ntile": 14,
-    # r14 events soak (deeper-example pass over the same pools): a
-    # measured purchase bucket whose every value is NULL was flagged
-    # filled=1 (imputed) by the plan's sum_value-IS-NULL test where the
-    # oracle's row-presence test says 0; the plan now joins an explicit
-    # `present` marker. Fixture purchases all carry values → identical
-    # there; fronted per the rewrite rule.
-    "x_gapfill": 14,
-    # r14 JSON-ingest fuzz (VERDICT r13 item 4): scan_csv_json's CSV hop
-    # now carries sink_csv's hardened option set so the ingest operator
-    # round-trips arbitrary string content (the r13 "defaults fine for
-    # [A-Z ]+ names" adjudication limited robustness to fixture content);
-    # the JSON hop needed nothing — probed exact on every hostile shape.
-    # Fixture-identical; fronted per the rewrite rule.
-    "scan_csv_json": 14,
-    # r14 (ADVICE r13): sketch_kmv's estimator kept plain ANSI `/` behind a
-    # probabilistic tau!=0 argument, but md5 is unkeyed — crafted custkeys
-    # whose md5 starts with 12 zero hex chars (~2^48 trials each) can make
-    # tau = 0 and ANSI-abort the job where the DuckDB oracle's x/0 is NULL.
-    # Now F.try_divide, matching the r12/r13 division hardening. Fixture
-    # taus are large positive → results identical there; fronted per the
-    # rewrite rule.
-    # (sketch_kmv's r14 try_divide/NULL-key entry superseded by the r19
-    # single-pass entry below — single entry at the max round)
-    # r15 (§7.7.2, the deferred empty==empty polish): ReconPair.fingerprints'
-    # status now treats a both-sides-NULL metric (min/max/sum over an empty
-    # or all-null side) as MATCH via eqNullSafe, and the shared summary
-    # oracle gained the mirrored null-mismatch arm + a COALESCE on the
-    # cells SUM — empty == empty reads all-MATCH on both engines (the two
-    # rows leave the empty-sweep KNOWN ledger). Fixture sides are non-empty
-    # with non-null metrics → results identical there; fronted per the
-    # rewrite rule (the shared oracle-text change fronts both via snapshot
-    # mismatch as well). (recon_api_summary / recon_crossformat r15 entries
-    # superseded by the r18 batch below — single entry at the max round)
-    # r15 full-suite hypothesis find: the r14 ASC-null-order class in its
-    # ARRAY-SIDE form — x_domain_mix's normalizer folded sqrt-weights over
-    # array_sort'd (source, r) structs where Spark's struct comparison put
-    # the NULL source FIRST and DuckDB's bare ORDER BY put it LAST, so the
-    # double sum rounded one ulp apart on corpora with a NULL source group
-    # and unlucky magnitudes. Both sides now pin NULLS LAST (leading
-    # is-null flag in the sort struct / explicit NULLS LAST in the
-    # oracle). Fixture sources are non-null → identical there; fronted
-    # per the rewrite rule. Engine-wide sweep of every other
-    # array_sort/list_reduce fold found only non-nullable keys (positions,
-    # the HLL register grid, fixed ranges).
-    "x_domain_mix": 15,
-    # r16 (ADVICE r15): the o_month partition key read back from v2's
-    # directory layout is now cast to string explicitly — 'yyyy-MM'
-    # inference as string held by probe but partitionColumnTypeInference
-    # is not conf-pinned and the driver supplies its own session.
-    # Behavior-identical on the installed Spark (cast of an
-    # already-string column is a no-op); fronted per the rewrite rule.
-    # (recon_partition_evolve's r16 partition-key-cast entry superseded by
-    # the r19 clustered-write entry below — single entry at the max round)
-    "recon_layout_compact": 16,
-    # r18 OPTIMIZATION round, guide §2.4 (remove redundant passes): the
-    # faulty-target fixture orders_target() now derives its duplicate-key
-    # fault via explode(sequence(1, copies)) in ONE source scan instead of
-    # UNION ALL (which re-scanned the source once per union arm at every
-    # target reference in a consumer's plan); row multiset identical,
-    # every consumer order-insensitive. Additionally the bucket-recon
-    # digest tier materializes its bucket-bounded `bad` list once
-    # (_bh_bad localCheckpoint) instead of re-inlining the two-scan
-    # digest subtree at 2-3 plan sites, and remediate_apply shares ONE
-    # materialized source digest between fault detection and the
-    # post-apply re-verify. Results bit-identical (strict parity 16/16 at
-    # sf0.01, r18 session); fronted per the rewrite rule.
-    "recon_rowcount": 18,
-    "recon_colfp": 18,
-    "recon_keys_dup": 18,
-    "recon_rowhash": 18,
-    "recon_celldiff": 18,
-    "recon_tolerance": 18,
-    "recon_partition_drill": 18,
-    "recon_agg_drift": 18,
-    "recon_sample_audit": 18,
-    # r19 OPTIMIZATION round, guide §2.4: the bucket-recon digest and drill
-    # tiers now compute both sides in ONE union-tagged aggregate each
-    # (_bh_digest_both / the fused _bh_key_diff) instead of two per-side
-    # aggregates + a full-outer merge join — one exchange where there were
-    # two + a join, with the full-outer NULL semantics reproduced exactly
-    # (NULL-bucket rows stay per-side via a null-side grouping column).
-    # remediate_apply additionally fuses its r18 pair of digest
-    # checkpoints (source digest + disagreement list) into ONE both-sides
-    # digest checkpoint: 5 eager actions → 4. Row-identical (pinned
-    # against the old spelling incl. NULL keys in
-    # tests/test_round19_opt.py; strict parity green); fronted per the
-    # rewrite rule.
-    "recon_bucket_hash": 19,
-    "recon_bucket_drill": 19,
-    "recon_remediate": 19,
-    "recon_remediate_apply": 19,
-    # r19 OPTIMIZATION round, guide §2.4/§5: ReconPair.summary() fuses its
-    # six independent check plans (12 side-consumptions behind different
-    # shuffle keys, persist-backed) into a per-key tier (ONE full-outer
-    # join against a once-aggregated target: missing/duplicate keys, hash
-    # diffs via the distinct-hash set, cell diffs via the min-hash
-    # survivor struct) + a global fingerprint tier that also carries the
-    # count check; the persist pair is gone with the fan-out that
-    # justified it (measured 2.8-2.9 s → 2.2-2.5 s per report at sf0.1).
-    # Check counts equal the standalone methods' row counts (pinned vs the
-    # unfused spelling incl. NULL-key/dup-key hostile pairs in
-    # tests/test_round19_opt.py; strict parity green); fronted per the
-    # rewrite rule.
-    "recon_api_summary": 19,
-    "recon_crossformat": 19,
-    # r18 OPTIMIZATION round, same guide-§2.4 class as the recon batch:
-    # documents_dup()/embeddings_dup() now inject their duplicate rows via
-    # explode-over-offsets in ONE corpus scan instead of UNION ALL of a
-    # second filtered scan — every consumer's physical plan halves its
-    # parquet scans (x_dedup_ngram 8→4, x_decontaminate 6→3, plan audit
-    # r18); multiset identical, consumers order-insensitive. Additionally
-    # x_minhash_jaccard_est persists its 3-consumer signature aggregate
-    # (ran 3× before). Strict parity 11/11 + 2 rows-only at sf0.01;
-    # fronted per the rewrite rule.
-    "x_dedup_exact": 18,
-    "x_dedup_near": 18,
-    "x_dedup_simhash": 18,
-    "x_dedup_ngram": 18,
-    "x_dedup_embed": 18,
-    "x_dedup_semantic": 18,
-    "x_corpus_clean": 18,
-    "x_dedup_containment": 18,
-    "x_minhash_jaccard_est": 18,
-    "x_dedup_simhash_banded": 18,
-    "x_decontaminate": 18,
-    "x_dedup_minhash_mllib": 18,
-    "x_dedup_near_indexed": 18,
-    # r18 OPTIMIZATION round, guide §1.2-2/§2.3: agg_approx's HLL rsd
-    # 0.01 → 0.02 — buffer width grows ~1/rsd², so the 0.01 sketch carried
-    # 1639 long words PER COLUMN through codegen and every partial-agg
-    # shuffle row (measured 2.1 s → 0.69 s locally; the same bytes ride
-    # the 100 TB merge). Emitted values identical (exact counts + the
-    # tolerance assertions, now 5×2% = ±10%); parity green; fronted per
-    # the rewrite rule.
-    "agg_approx": 18,
-    # r18 OPTIMIZATION round: keys_missing's two directed ANTI joins
-    # (each inlining both sides' distinct aggregates) replaced by ONE
-    # full-outer over the same two distincts with null-side
-    # classification — identical multiset, one merge pass instead of two —
-    # in addition to the single-scan faulty-target batch above (ADVICE r18:
-    # the batch's duplicate literal removed, this entry is the single one).
-    # Parity green; fronted per the rewrite rule.
-    "recon_keys_missing": 18,
-    # r18 OPTIMIZATION round: _documents3's 5-arm UNION ALL (SIX corpus
-    # scans per plan reference) → single-scan explode-over-offsets, the
-    # documents_dup class. Isolated A/B: clusters 2.79→2.30 s, drop_list
-    # 2.38→2.05 s. Multiset identical, parity green; fronted.
-    "x_dedup_clusters": 18,
-    "x_dedup_drop_list": 18,
-    # r18 OPTIMIZATION round, same single-scan class: set_dedup's %20
-    # echo fixture and recon_snapshot_cdc's v2 snapshot (_orders_v2 —
-    # delete/insert/evolve now one explode over per-row offset arrays,
-    # the delete arm an empty array). Multiset identical, parity green;
-    # fronted per the rewrite rule.
-    "set_dedup": 18,
-    "recon_snapshot_cdc": 18,
-    # r19 OPTIMIZATION round, guide §2.4 (VERDICT r18 item 5): the two
-    # known subtree-duplication holdouts restructured without the persist
-    # that measured as a loss in r18. sketch_kmv: ONE scan + one per-hash
-    # aggregate + one cumulative window + one final aggregate replaces six
-    # consumers re-inlining the distinct-hash subtree (7 scans → 1);
-    # output bit-identical to the TakeOrdered spelling (verified
-    # row-for-row, pinned in tests/test_round19_opt.py). x_token_pmi: the
-    # corpus totals now fall out of the (checkpointed, vocab-sized)
-    # unigram aggregate arithmetically (t = Σcnt, bt = t − docs-with-
-    # tokens), 5 scans → 2. Parity green; fronted per the rewrite rule.
-    "sketch_kmv": 19,
-    "x_token_pmi": 19,
-    # r19 OPTIMIZATION round, guide §2.4/§3.3 (VERDICT r18 item 6): q2's
-    # correlated-min stage is a per-part window minimum computed after the
-    # broadcast part filter, replacing the groupBy + (part, cost)
-    # join-back that re-inlined the partsupp⋈eu subtree on both sides
-    # (11 scans → 6); a part-key subset cannot change a per-part-key
-    # minimum and ties keep every minimum-cost supplier, so the multiset
-    # is identical. Parity + fuzzed-star suite green; fronted per the
-    # rewrite rule.
-    "tpch_q2": 19,
-    # r19 OPTIMIZATION round, guide §2.3 (VERDICT r18 item 7): one
-    # json_tuple parse serves both text extractions (same Jackson
-    # top-level-key semantics as get_json_object — r14 hostile-events
-    # fuzz re-run green); the two STRICT from_json parses remain the
-    # declared typing contract. 4 parses/row → 3, measured 1.04 → 0.72 s.
-    # Parity green; fronted per the rewrite rule.
-    "fn_map_json": 19,
-    # r19 OPTIMIZATION round, guide §2.5/§4 (VERDICT r18 item 8): the
-    # grouped-map exchange is pinned at session width
-    # (repartition(defaultParallelism, user_id) — satisfies the groupBy's
-    # distribution requirement, still ONE exchange): AQE's byte-based
-    # coalescing collapsed the small exchange to a single partition and
-    # serialized all per-user Python calls through one worker (2.39 s →
-    # 0.54 s at sf0.1, rows identical; the Python-boundary operator itself
-    # is untouched). Parity green; fronted per the rewrite rule.
-    "udtf_apply": 19,
-    # r19 OPTIMIZATION round, guide §2.4: sketch_hll computes the sketch
-    # over the DISTINCT key set (rho is a pure key function, so
-    # duplicates cannot change a per-register MAX) and the exact
-    # calibration count is the sum of per-register distinct-key counts —
-    # 2 scans → 1, the countDistinct expand + second full pass gone
-    # (1.83 → 0.82 s). sketch_bloom derives true membership from the SAME
-    # checkpointed distinct-key frame the filter was built from instead
-    # of re-scanning orders (2 scans → 1 on the orders side). Parity
-    # green; fronted per the rewrite rule.
-    "sketch_hll": 19,
-    "sketch_bloom": 19,
-    # r19 OPTIMIZATION round, guide §2.4: sketch_cms's probe list and
-    # exact calibration come from ONE filtered per-user aggregate (the
-    # probed users' true counts ride the same groupBy that used to run
-    # twice) — 3 scans → 2. Parity green; fronted per the rewrite rule.
-    "sketch_cms": 19,
-    # r19 OPTIMIZATION round, guide §6: the two partitioned writes that
-    # lacked a pre-write repartition on their partition key now have one
-    # (recon_partition_evolve's v2 month layout, sink_partitioned's flag
-    # layout) — pins file count at one per partition value regardless of
-    # scan width (the session's scan-parallelism floor otherwise
-    # multiplies files by the split count), and it is the standard
-    # write.distribution-mode=hash clustered-write shape at scale.
-    # Written rows identical; parity green; fronted per the rewrite rule.
-    "recon_partition_evolve": 19,
-    "sink_partitioned": 19,
-}
-
-#: Snapshot of each oracle's md5 as of the query's most recent external
-#: verification row (repo root, maintained by tools/update_oracle_snapshot.py
-#: at round start).  An oracle whose CURRENT text no longer matches its
-#: snapshot hash was rewritten after its last row, so the row no longer
-#: attests the oracle actually in the repo — the query re-fronts exactly
-#: like a plan rewrite.  _MODIFIED_IN_ROUND (above) tracks plan rewrites by
-#: hand; this tracks oracle rewrites mechanically, closing the hole where an
-#: oracle-semantics change on a recently-rowed query kept sorting as
-#: verified (observed: x_multimodal_binary's round-5 oracle upgrade).
-#: Entries are ``{"hash": md5, "round": N}`` — the round makes the refresh
-#: idempotent: a query already stamped for its latest row's round is never
-#: re-stamped, so running the tool AFTER editing an oracle mid-round cannot
-#: accidentally bless the edit.  (Bare-string entries from the v1 format
-#: are still read.)
+#: Per query, ``{"oracle": md5 | None, "code": md5, "round": N}``: the hashes
+#: its latest external verification row (of round N) attested; maintained by
+#: tools/update_oracle_snapshot.py. A query whose entry is missing or whose
+#: current hashes differ from it is queued for re-verification. An entry
+#: stamped for its query's latest row is never re-stamped, so running the
+#: tool after an edit cannot bless the edit.
 _SNAPSHOT_FILE = "ORACLE_SNAPSHOT.json"
 
 _loaded = False
@@ -485,7 +84,7 @@ def repo_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _oracle_snapshot() -> dict[str, str | dict]:
+def read_snapshot() -> dict[str, dict]:
     try:
         with open(os.path.join(repo_root(), _SNAPSHOT_FILE)) as fh:
             return json.load(fh)
@@ -493,21 +92,37 @@ def _oracle_snapshot() -> dict[str, str | dict]:
         return {}
 
 
-def snapshot_hash(entry: str | dict | None) -> str | None:
-    """Hash held by a snapshot entry (v2 dict or v1 bare string)."""
-    if isinstance(entry, dict):
-        return entry.get("hash")
-    return entry
+def write_snapshot(snapshot: dict[str, dict]) -> None:
+    with open(os.path.join(repo_root(), _SNAPSHOT_FILE), "w") as fh:
+        json.dump(snapshot, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
-def _oracle_changed(name: str, snapshot: dict[str, str | dict]) -> bool:
-    """True when the query's current oracle text is not the text its most
-    recent verification row attested (missing snapshot entry counts as
-    changed: fronting is the safe default for an untracked oracle)."""
-    oracle = REGISTRY[name].oracle
-    if oracle is None:
-        return False
-    return snapshot_hash(snapshot.get(name)) != oracle_hash(oracle)
+def stamp(name: str, rnd: int) -> dict:
+    """Snapshot entry attesting the query's current oracle and code."""
+    spec = REGISTRY[name]
+    oracle = None if spec.oracle is None else oracle_hash(spec.oracle)
+    return {"oracle": oracle, "code": codehash.fingerprint(spec.fn), "round": rnd}
+
+
+def stamped_round(snapshot: dict[str, dict], name: str) -> int | None:
+    """Round the query's entry was stamped for; None when it has none."""
+    entry = snapshot.get(name)
+    return None if entry is None else entry["round"]
+
+
+def changed(name: str, snapshot: dict[str, dict]) -> list[str]:
+    """Which of ``code``/``oracle`` differ from what the query's snapshot
+    entry attests. A missing entry counts as both; code whose source cannot
+    be read counts as changed."""
+    entry = snapshot.get(name)
+    if entry is None:
+        return ["code", "oracle"]
+    now = stamp(name, entry["round"])
+    stale = [k for k in ("code", "oracle") if entry[k] != now[k]]
+    if now["code"] is None and "code" not in stale:
+        stale.insert(0, "code")  # unreadable code is never attested
+    return stale
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -560,20 +175,20 @@ def ordered_names() -> list[str]:
     """Registry names, least-recently-externally-verified first.
 
     Never-verified queries sort first (in registration order), then queries
-    whose plan OR oracle was rewritten after their last verification row,
-    then everything else by the round of its most recent row.
+    ``changed()`` since their last verification row, then everything else
+    by the round of its most recent row.
     """
     load_all_modules()
     rounds = _verified_rounds()
-    snapshot = _oracle_snapshot()
+    snapshot = read_snapshot()
     reg_index = {n: i for i, n in enumerate(REGISTRY)}
 
     def key(n: str) -> tuple[int, int, int]:
         last = rounds.get(n)
         if last is None:
             return (0, 0, reg_index[n])
-        if _MODIFIED_IN_ROUND.get(n, 0) > last or _oracle_changed(n, snapshot):
-            # among rewritten queries, the stalest row re-verifies first
+        if changed(n, snapshot):
+            # among changed queries, the stalest row re-verifies first
             return (1, last, reg_index[n])
         return (2, last, reg_index[n])
 

@@ -3,7 +3,7 @@
     python tools/round_start.py [window_size]
 
 1. Refreshes ORACLE_SNAPSHOT.json from the latest CORRECTNESS round
-   (tools/update_oracle_snapshot.py's default mode) — MUST happen before any
+   (tools/update_oracle_snapshot.py) — MUST happen before any query or
    oracle is edited this round, or the edit will be stamped as verified.
 2. Prints the projected verification window (tools/show_rotation.py) so
    additions/rewrites can be budgeted against the rotation: every new query

@@ -1,6 +1,7 @@
 """Print the verification rotation: for each registry query, its position
 in ``ordered_names()``, its last external correctness row, and whether it
-is queued for re-verification. Usage::
+is queued for re-verification because its code or oracle changed since
+that row. Usage::
 
     python tools/show_rotation.py [window_size]
 
@@ -23,25 +24,22 @@ def main() -> None:
     window = int(sys.argv[1]) if len(sys.argv) > 1 else 50
     registry.load_all_modules()
     rounds = registry._verified_rounds()
-    snapshot = registry._oracle_snapshot()
+    snapshot = registry.read_snapshot()
     order = registry.ordered_names()
     n_unseen = sum(1 for n in order if n not in rounds)
     print(f"{len(order)} queries; {n_unseen} never externally verified")
     print(f"projected window (first {window}):")
     for i, n in enumerate(order):
         last = rounds.get(n)
-        mod = registry._MODIFIED_IN_ROUND.get(n, 0)
+        stale = registry.changed(n, snapshot)
         tag = (
             "NEVER"
             if last is None
-            else f"r{last}+REWRITTEN"
-            if mod > last
-            else f"r{last}+ORACLE-CHANGED"
-            if registry._oracle_changed(n, snapshot)
+            else f"r{last}+CHANGED({'|'.join(stale)})"
+            if stale
             else f"r{last}"
         )
-        marker = " | " if i == window else ""
-        if marker:
+        if i == window:
             print(f"--- window boundary ({window}) ---")
         print(f"  {i:3d}  {n:28s} {tag}")
 

@@ -1,34 +1,32 @@
-"""Refresh ORACLE_SNAPSHOT.json — the per-query md5 of each oracle's text as
-of its most recent external verification row (registry.py reads it to front
-queries whose oracle was rewritten after their last row).
+"""Refresh ORACLE_SNAPSHOT.json — per query, the oracle hash and code
+fingerprint its most recent external verification row attested
+(registry.py queues a query for re-verification when either differs from
+the current one; registry.py owns the entry format).
 
-Entries are ``{"hash": md5, "round": N}``; a query is (re-)stamped ONLY when
-its latest CORRECTNESS row is from a round NEWER than the entry's recorded
+A query is (re-)stamped from its CURRENT oracle and code ONLY when its
+latest CORRECTNESS row is from a round NEWER than the entry's recorded
 round. That makes the refresh idempotent within a round: after the
-round-start run stamps the latest round, editing an oracle and re-running
-the tool cannot bless the edit — the query keeps fronting until the NEXT
-round's row attests the new text. (Residual rule: run the tool before
-editing oracles in the same session where a new CORRECTNESS round just
-landed.)
+round-start run stamps the latest round, editing a query or its oracle and
+re-running the tool cannot bless the edit — the query stays queued until
+the NEXT round's row attests the new text. (Residual rule: run the tool
+before editing queries in the same session where a new CORRECTNESS round
+just landed.)
 
 Entries missing entirely are stamped from current text ONLY when nothing
 is being attested away: the query has no verification row at all, or its
 latest row is from the latest round (so current text is what that row just
 verified). A missing entry for a query whose rows are all OLDER stays
-absent — it is fronting precisely because its oracle text was never
-attested, and stamping it from current text would cancel the
-re-verification the missing entry forces
-(tests/test_registry_rotation.py::test_missing_snapshot_entry_fronts).
+absent — it is queued precisely because its text was never attested, and
+stamping it from current text would cancel the re-verification the missing
+entry forces (tests/test_registry_rotation.py::test_missing_snapshot_entry_fronts).
 
 Usage::
 
-    python tools/update_oracle_snapshot.py           # idempotent refresh
-    python tools/update_oracle_snapshot.py --seed-all  # one-time bootstrap
+    python tools/update_oracle_snapshot.py
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -37,62 +35,48 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from reconciliation_hive_data_spark import registry  # noqa: E402
 
 
-def stamp_due(
-    entry: dict | str | None, last_row: int, latest: int, seed_all: bool
-) -> bool:
-    """Should this query's snapshot entry be (re-)stamped from CURRENT
-    oracle text? Only when that text carries an attestation: the latest
-    round's row just verified it, or no row exists to contradict it."""
-    if seed_all:
-        return True
-    if entry is None:
+def stamp_due(stamped_round: int | None, last_row: int, latest: int) -> bool:
+    """Should this query's snapshot entry, stamped for ``stamped_round``
+    (None: no entry), be (re-)stamped from its CURRENT oracle and code? Only
+    when they carry an attestation: the latest round's row just verified
+    them, or no row exists to contradict them."""
+    if stamped_round is None:
         return last_row == 0 or last_row == latest
-    stamped_round = entry.get("round", 0) if isinstance(entry, dict) else 0
     return last_row == latest and last_row > stamped_round
 
 
+def refresh(
+    old: dict[str, dict], rounds: dict[str, int]
+) -> tuple[dict[str, dict], list[str]]:
+    """The snapshot after one refresh of ``old`` given each query's latest
+    row round, and the queries whose stamped hashes the refresh replaced."""
+    latest = max(rounds.values(), default=0)
+    snapshot, refreshed = {}, []
+    for name in registry.REGISTRY:
+        stamped = registry.stamped_round(old, name)
+        last_row = rounds.get(name, 0)
+        if stamp_due(stamped, last_row, latest):
+            if registry.changed(name, old):
+                refreshed.append(name)
+            snapshot[name] = registry.stamp(name, max(last_row, stamped or 0))
+        elif stamped is not None:
+            snapshot[name] = old[name]
+    return snapshot, sorted(refreshed)
+
+
 def main() -> None:
-    seed_all = "--seed-all" in sys.argv[1:]
     registry.load_all_modules()
     rounds = registry._verified_rounds()
-    latest = max(rounds.values(), default=0)
-    path = os.path.join(registry.repo_root(), registry._SNAPSHOT_FILE)
-    snapshot = registry._oracle_snapshot()
-
-    refreshed, pruned = [], []
-    for name, spec in registry.REGISTRY.items():
-        if spec.oracle is None:
-            continue
-        entry = snapshot.get(name)
-        last_row = rounds.get(name, 0)
-        if isinstance(entry, str):
-            # migrate a v1 bare-hash entry in place, PRESERVING its hash
-            # (it attests the text of the query's last row, not current
-            # text) and attributing it to that row's round
-            entry = {"hash": entry, "round": last_row}
-            snapshot[name] = entry
-        stamped_round = entry.get("round", 0) if isinstance(entry, dict) else 0
-        if stamp_due(entry, last_row, latest, seed_all):
-            h = registry.oracle_hash(spec.oracle)
-            if registry.snapshot_hash(entry) != h:
-                refreshed.append(name)
-            snapshot[name] = {"hash": h, "round": max(last_row, stamped_round)}
-    for name in sorted(snapshot):
-        spec = registry.REGISTRY.get(name)
-        if spec is None or spec.oracle is None:
-            pruned.append(name)
-            del snapshot[name]
-
-    with open(path, "w") as fh:
-        json.dump(dict(sorted(snapshot.items())), fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    old = registry.read_snapshot()
+    snapshot, refreshed = refresh(old, rounds)
+    registry.write_snapshot(snapshot)
     print(
         f"{registry._SNAPSHOT_FILE}: {len(snapshot)} entries "
-        f"(latest round r{latest}; refreshed {len(refreshed)}, "
-        f"pruned {len(pruned)})"
+        f"(latest round r{max(rounds.values(), default=0)}; "
+        f"refreshed {len(refreshed)}, pruned {len(set(old) - set(snapshot))})"
     )
     if refreshed:
-        print("refreshed:", ", ".join(sorted(refreshed)))
+        print("refreshed:", ", ".join(refreshed))
 
 
 if __name__ == "__main__":
