@@ -7,8 +7,13 @@ config object for the Spark engine: a :class:`ReconPair` describes WHAT to
 reconcile; each method composes the corresponding distributed check from
 operators in :mod:`plans.recon`'s style and returns a report DataFrame.
 
-The named queries in plans/recon.py are fixed instantiations kept for the
-oracle harness; users reconcile their own tables through this API::
+Each check has ONE Spark implementation, the method below. A registered
+recon query that runs such a check is a single call on :func:`orders_pair`
+(recon_agg_drift shares ``psi_frame`` with :meth:`ReconPair.drift`), so the
+DuckDB oracle hash-checks the code users call. Only recon_celldiff,
+recon_tolerance and recon_colfp are written out: their reports differ from
+the methods' (DECIMAL(28,6) value text, a pct-diff column, other metric
+names). Users reconcile their own tables through this API::
 
     pair = ReconPair(
         source=spark.read.parquet("s3://prod/orders"),
@@ -28,7 +33,7 @@ oracle harness; users reconcile their own tables through this API::
     pair.sample_audit("0")  # row-hash audit on a deterministic 1/16 sample
 
 Every report is algebraic/partially-aggregatable or a key-shuffled
-anti/inner join — the shapes that hold at 100 TB (SURVEY.md §7.3.7).
+full-outer/inner join — the shapes that hold at 100 TB (SURVEY.md §7.3.7).
 """
 
 from __future__ import annotations
@@ -63,6 +68,7 @@ class ReconPair:
     tolerance: float = 0.0
 
     def __post_init__(self) -> None:
+        self.keys = list(self.keys)  # DataFrame.join takes a list, not a tuple
         for col, kind in self.compare_cols.items():
             if kind not in _KINDS:
                 raise ValueError(f"{col}: unknown kind {kind!r}; use one of {_KINDS}")
@@ -76,11 +82,20 @@ class ReconPair:
 
     # -- helpers ----------------------------------------------------------
 
-    def _key(self) -> list[str]:
-        return list(self.keys)
-
     def _hash_cols(self) -> list[tuple[str, str]]:
         return [(k, "int") for k in self.keys] + list(self.compare_cols.items())
+
+    def _cell_differs(self, sc: Column, tc: Column, kind: str) -> Column:
+        """Null-safe cell comparison: a null on exactly one side always
+        differs; doubles differ only beyond ``tolerance``."""
+        if kind == "double" and self.tolerance > 0:
+            # |s - t| is NULL when either side is null, and TRUE|NULL /
+            # ~(FALSE|NULL) semantics would silently drop null-vs-value
+            # diffs: the null-mismatch arm stands on its own.
+            return (sc.isNull() != tc.isNull()) | (
+                ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
+            )
+        return ~sc.eqNullSafe(tc)
 
     # -- checks -----------------------------------------------------------
 
@@ -104,26 +119,36 @@ class ReconPair:
         )
 
     def key_diff(self) -> DataFrame:
-        """Keys present on exactly one side (sort-merge anti joins)."""
-        sk = self.source.select(*self._key()).distinct()
-        tk = self.target.select(*self._key()).distinct()
-        miss_t = sk.join(tk, self._key(), "left_anti").select(
-            *self._key(), F.lit("MISSING_IN_TARGET").alias("side")
+        """Keys present on exactly one side: ONE sort-merge full-outer join
+        over the two distinct key sets (broadcast would be wrong at 100 TB:
+        both sides are fact-sized). Two directed anti joins inline each
+        side's distinct aggregate twice and pay two merge passes; the full
+        outer emits the same rows from one pass over the same two
+        exchanges (r18). Rows are classified by literal presence columns,
+        not by a NULL key, so a NULL key (which never equi-joins) is
+        reported on the side it actually occurs on."""
+        sk = self.source.select(*self.keys).distinct().withColumn("_s", F.lit(1))
+        tk = self.target.select(*self.keys).distinct().withColumn("_t", F.lit(1))
+        return (
+            sk.join(tk, self.keys, "full_outer")
+            .filter(F.col("_s").isNull() | F.col("_t").isNull())
+            .select(
+                *self.keys,
+                F.when(F.col("_t").isNull(), "MISSING_IN_TARGET")
+                .otherwise("MISSING_IN_SOURCE")
+                .alias("side"),
+            )
         )
-        miss_s = tk.join(sk, self._key(), "left_anti").select(
-            *self._key(), F.lit("MISSING_IN_SOURCE").alias("side")
-        )
-        return miss_t.unionByName(miss_s)
 
     def duplicate_keys(self) -> DataFrame:
         """Keys occurring more than once, per side."""
 
         def dups(df: DataFrame, side: str) -> DataFrame:
             return (
-                df.groupBy(*self._key())
+                df.groupBy(*self.keys)
                 .agg(F.count("*").alias("cnt"))
                 .filter(F.col("cnt") > 1)
-                .select(F.lit(side).alias("side"), *self._key(), "cnt")
+                .select(F.lit(side).alias("side"), *self.keys, "cnt")
             )
 
         return dups(self.source, "source").unionByName(dups(self.target, "target"))
@@ -131,11 +156,11 @@ class ReconPair:
     def row_hash_diff(self) -> DataFrame:
         """Key-matched rows whose canonical md5 fingerprints differ."""
         cols = self._hash_cols()
-        sh = self.source.select(*self._key(), canonical_row_hash(cols).alias("h"))
-        th = self.target.select(*self._key(), canonical_row_hash(cols).alias("h")).distinct()
-        j = sh.alias("s").join(th.alias("t"), self._key())
+        sh = self.source.select(*self.keys, canonical_row_hash(cols).alias("h"))
+        th = self.target.select(*self.keys, canonical_row_hash(cols).alias("h")).distinct()
+        j = sh.alias("s").join(th.alias("t"), self.keys)
         return j.filter(F.col("s.h") != F.col("t.h")).select(
-            *self._key(),
+            *self.keys,
             F.col("s.h").alias("src_hash"),
             F.col("t.h").alias("tgt_hash"),
         )
@@ -152,7 +177,7 @@ class ReconPair:
         reproducible in the SQL oracle."""
         from pyspark.sql.window import Window
 
-        key = self._key()
+        key = self.keys
         s = self.source.alias("s")
         w = Window.partitionBy(*key).orderBy(canonical_row_hash(self._hash_cols()))
         t = (
@@ -166,19 +191,9 @@ class ReconPair:
         arms: list[Column] = []
         for col, kind in self.compare_cols.items():
             sc, tc = F.col(f"s.{col}"), F.col(f"t.{col}")
-            if kind == "double" and self.tolerance > 0:
-                # Null-safe even with tolerance: |s - t| is NULL when either
-                # side is null, and TRUE|NULL / ~(FALSE|NULL) semantics would
-                # silently drop null-vs-value diffs. Split the null-mismatch
-                # arm out so it can never be eaten by a NULL comparison.
-                differs = (sc.isNull() != tc.isNull()) | (
-                    ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
-                )
-            else:
-                differs = ~sc.eqNullSafe(tc)
             arms.append(
                 F.when(
-                    differs,
+                    self._cell_differs(sc, tc, kind),
                     F.struct(
                         F.lit(col).alias("col_name"),
                         sc.cast("string").alias("src_val"),
@@ -266,33 +281,30 @@ class ReconPair:
 
     def sample_audit(self, prefix: str = "0") -> DataFrame:
         """Full-fidelity canonical-row-hash audit on a deterministic key
-        sample: keys whose md5 hex starts with ``prefix`` (1 char = 1/16 of
-        keys, 2 chars = 1/256, ...). No RNG state — the same keys sample on
-        every run and cluster size, so consecutive audits are comparable.
-        The predicate filters both sides BEFORE the join shuffle, so cost
-        tracks the sample fraction (the hourly-tier knob; the nightly full
-        run is :meth:`row_hash_diff`)."""
-        key = self.keys[0]
+        sample: keys whose first key column's md5 hex starts with ``prefix``
+        (1 char = 1/16 of keys, 2 chars = 1/256, ...). No RNG state — the
+        same keys sample on every run and cluster size, so consecutive
+        audits are comparable. The predicate filters both sides BEFORE the
+        join shuffle, so cost tracks the sample fraction (the hourly-tier
+        knob; the nightly full run is :meth:`row_hash_diff`). Sides join on
+        every key column; the target is deduped on (keys, hash) as in
+        :meth:`row_hash_diff`, so an exact duplicate row counts once."""
         pred = F.substring(
-            F.md5(F.col(key).cast("string")), 1, len(prefix)
+            F.md5(F.col(self.keys[0]).cast("string")), 1, len(prefix)
         ) == prefix
-        cols = self._hash_cols()
-        src = self.source.filter(pred).select(
-            *self._key(), canonical_row_hash(cols).alias("h")
-        )
-        tgt = self.target.filter(pred).select(
-            *self._key(), canonical_row_hash(cols).alias("h")
-        )
-        s, t = src.alias("s"), tgt.alias("t")
-        sk, tk = F.col(f"s.{key}"), F.col(f"t.{key}")
+        h = canonical_row_hash(self._hash_cols()).alias("h")
+        s = self.source.filter(pred).select(*self.keys, h)
+        t = self.target.filter(pred).select(*self.keys, h).distinct()
+        # h is an md5, never NULL: a NULL h marks the absent side
         status = (
-            F.when(tk.isNull(), "MISSING_IN_TARGET")
-            .when(sk.isNull(), "MISSING_IN_SOURCE")
+            F.when(F.col("t.h").isNull(), "MISSING_IN_TARGET")
+            .when(F.col("s.h").isNull(), "MISSING_IN_SOURCE")
             .when(F.col("s.h") == F.col("t.h"), "MATCH")
             .otherwise("MISMATCH")
         )
         return (
-            s.join(t, sk == tk, "full_outer")
+            s.alias("s")
+            .join(t.alias("t"), self.keys, "full_outer")
             .groupBy(status.alias("status"))
             .agg(F.count("*").alias("n_keys"))
         )
@@ -320,7 +332,7 @@ class ReconPair:
           by key (no extra exchange — already key-partitioned). NULL keys
           keep the joins' never-match semantics via a null-side grouping
           column (each side's NULL-key group stays its own row, exactly as
-          the distinct+anti-join and per-side groupBys treated them).
+          key_diff's full-outer join and the per-side groupBys treat them).
         - **global tier** (count_diff_grains, fingerprint_diffs): the
           fingerprints() metric vector per side, whose row_count metric
           already carries the count check (integer counts differ by ≥ 1,
@@ -334,7 +346,7 @@ class ReconPair:
         Each check's count is EXACTLY the row count of the corresponding
         standalone method's frame (pinned against the unfused spelling in
         tests/test_round19_opt.py and by the fault-census fuzz in
-        tests/test_api_fuzz.py); the methods themselves are unchanged.
+        tests/test_api_fuzz.py).
 
         The r18 persist-both-sides lifecycle is GONE with the fan-out that
         justified it: each side now has exactly two consumers, and the
@@ -347,7 +359,7 @@ class ReconPair:
         count/collect never re-runs the checks."""
         from operator import add, or_
 
-        key = self._key()
+        key = self.keys
         cols = list(self.compare_cols)
         h = canonical_row_hash(self._hash_cols())
 
@@ -371,16 +383,12 @@ class ReconPair:
             s_present & t_present,
             F.size("_th") - F.array_contains("_th", F.col("_h")).cast("int"),
         ).otherwise(F.lit(0))
-        cell_arms = []
-        for col, kind in self.compare_cols.items():
-            sc, tc = F.col(col), F.col("_tr").getField(col)
-            if kind == "double" and self.tolerance > 0:
-                differs = (sc.isNull() != tc.isNull()) | (
-                    ~sc.eqNullSafe(tc) & (F.abs(sc - tc) > F.lit(self.tolerance))
-                )
-            else:
-                differs = ~sc.eqNullSafe(tc)
-            cell_arms.append(F.when(differs, 1).otherwise(0))
+        cell_arms = [
+            F.when(
+                self._cell_differs(F.col(col), F.col("_tr").getField(col), kind), 1
+            ).otherwise(0)
+            for col, kind in self.compare_cols.items()
+        ]
         cells = F.when(
             s_present & t_present,
             reduce(add, cell_arms) if cell_arms else F.lit(0),
@@ -453,6 +461,24 @@ class ReconPair:
             .localCheckpoint()
         )
         return report
+
+
+def orders_pair(source: DataFrame, target: DataFrame) -> ReconPair:
+    """The standard orders pair every registered recon check runs on: key
+    o_orderkey, the five non-key orders columns, money tolerance 0.5."""
+    return ReconPair(
+        source=source,
+        target=target,
+        keys=["o_orderkey"],
+        compare_cols={
+            "o_custkey": "int",
+            "o_orderstatus": "string",
+            "o_totalprice": "double",
+            "o_orderdate": "ts",
+            "o_orderpriority": "string",
+        },
+        tolerance=0.5,
+    )
 
 
 def _fp_match() -> Column:
@@ -574,20 +600,7 @@ def recon_api_summary(spark, sf_dir: str) -> DataFrame:
     from .recon import orders_target
 
     orders = load(spark, sf_dir, "orders")
-    pair = ReconPair(
-        source=orders,
-        target=orders_target(orders, faulty=True),
-        keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
-        tolerance=0.5,
-    )
-    return pair.summary()
+    return orders_pair(orders, orders_target(orders, faulty=True)).summary()
 
 
 @query("recon_crossformat", oracle=_summary_oracle())
@@ -621,17 +634,4 @@ def recon_crossformat(spark, sf_dir: str) -> DataFrame:
         spark, sf_dir, "orders_tgt_orc", ["orders.parquet"], build,
         code=[orders_target],
     )
-    pair = ReconPair(
-        source=orders,
-        target=spark.read.orc(orc_path),
-        keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
-        tolerance=0.5,
-    )
-    return pair.summary()
+    return orders_pair(orders, spark.read.orc(orc_path)).summary()

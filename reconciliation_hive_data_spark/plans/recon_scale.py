@@ -21,7 +21,9 @@ plans/recon.py.
   keys sample on every run and on any cluster size). At 100 TB this is the
   hourly check (1/16 of the shuffle), with the nightly full recon_rowhash
   run catching the rest; the sample predicate is a narrow filter applied
-  BEFORE the join shuffle on both sides.
+  BEFORE the join shuffle on both sides. It is a single call on
+  ``api.orders_pair(...).sample_audit`` (imported inside the query body, so
+  the registry order is unchanged).
 
 100 TB notes: CDC joins key-on-key (sort-merge, AQE-sizable) and compares
 only named columns; drift aggregates are two-phase map-side-combinable
@@ -296,37 +298,17 @@ GROUP BY 1
 @query("recon_sample_audit", oracle=_SAMPLE_ORACLE)
 def recon_sample_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-fidelity row-hash audit on a deterministic 1/16 key sample:
-    keys whose md5 hex starts with '0'. No RNG state — the same keys are
-    sampled on every run, every engine, every cluster size, so consecutive
-    audits are comparable and a flagged key stays flagged until fixed. The
-    sample predicate filters BOTH sides before the join shuffle (plan-test
-    asserted), so audit cost tracks the sample fraction — the knob that
-    turns the nightly full recon_rowhash into an hourly check. Target-side
-    exact-duplicate rows collapse via full-row DISTINCT (value-identical,
-    so the survivor is well-defined)."""
-    pred = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) == "0"
-    src = load(spark, sf_dir, "orders")
-    src_s = src.filter(pred).select(
-        "o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h")
-    )
-    tgt_s = (
-        orders_target(src)
-        .dropDuplicates()
-        .filter(pred)
-        .select("o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h"))
-    )
-    s, t = src_s.alias("s"), tgt_s.alias("t")
-    status = (
-        F.when(F.col("t.o_orderkey").isNull(), "MISSING_IN_TARGET")
-        .when(F.col("s.o_orderkey").isNull(), "MISSING_IN_SOURCE")
-        .when(F.col("s.h") == F.col("t.h"), "MATCH")
-        .otherwise("MISMATCH")
-    )
-    return (
-        s.join(t, F.col("s.o_orderkey") == F.col("t.o_orderkey"), "full_outer")
-        .groupBy(status.alias("status"))
-        .agg(F.count("*").alias("n_keys"))
-    )
+    keys whose md5 hex starts with '0' (:meth:`ReconPair.sample_audit`).
+    No RNG state — the same keys are sampled on every run, every engine,
+    every cluster size, so consecutive audits are comparable and a flagged
+    key stays flagged until fixed. The sample predicate filters BOTH sides
+    before the join shuffle (plan-test asserted), so audit cost tracks the
+    sample fraction — the knob that turns the nightly full recon_rowhash
+    into an hourly check."""
+    from .api import orders_pair
+
+    orders = load(spark, sf_dir, "orders")
+    return orders_pair(orders, orders_target(orders)).sample_audit("0")
 
 
 # ---------------------------------------------------------------------------

@@ -257,6 +257,23 @@ def test_sample_audit_filters_before_join(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
+def test_key_diff_reads_each_side_once(spark, sf_dir):
+    """ReconPair.key_diff: ONE sort-merge full-outer join over the two
+    distinct key sets — each side scanned once and shuffled once, and no
+    fact-sized side broadcast. Two directed anti joins scan each side
+    twice."""
+    from reconciliation_hive_data_spark.plans.api import orders_pair
+    from reconciliation_hive_data_spark.plans.recon import orders_target
+
+    orders = load(spark, sf_dir, "orders")
+    p = plan(orders_pair(orders, orders_target(orders)).key_diff())
+    tree = p.split("\n\n")[0]
+    assert tree.count("Scan parquet") == 2
+    assert tree.count("Exchange") == 2
+    assert "SortMergeJoin FullOuter" in tree
+    assert "BroadcastHashJoin" not in tree
+
+
 def test_quantize_broadcasts_scalar_stats(spark, sf_dir):
     """x_embed_quantize: the 1-row [min,max] frame must broadcast into the
     corpus pass — a shuffle here would re-partition every vector to meet

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from reconciliation_hive_data_spark.catalog import load
+from reconciliation_hive_data_spark.plans import api
 from reconciliation_hive_data_spark.plans.api import ReconPair
 from reconciliation_hive_data_spark.plans.recon import orders_target
 
@@ -14,19 +15,7 @@ from reconciliation_hive_data_spark.plans.recon import orders_target
 @pytest.fixture(scope="module")
 def orders_pair(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
-    return ReconPair(
-        source=orders,
-        target=orders_target(orders, faulty=True),
-        keys=["o_orderkey"],
-        compare_cols={
-            "o_custkey": "int",
-            "o_orderstatus": "string",
-            "o_totalprice": "double",
-            "o_orderdate": "ts",
-            "o_orderpriority": "string",
-        },
-        tolerance=0.5,
-    )
+    return api.orders_pair(orders, orders_target(orders, faulty=True))
 
 
 def test_self_pair_summary_all_match(spark, sf_dir):
@@ -135,3 +124,22 @@ def test_sample_audit_matches_fault_classes(spark, sf_dir, orders_pair):
         "MATCH", "MISMATCH", "MISSING_IN_SOURCE", "MISSING_IN_TARGET"
     }
     assert audited["MATCH"] > sum(v for k, v in audited.items() if k != "MATCH")
+
+
+def test_sample_audit_joins_on_every_key(spark):
+    """A composite key whose first column repeats: the audit must join on
+    (a, b), not on a alone — a self-pair is then one MATCH per sampled key
+    (joining on a alone pairs every sampled row with its 79 a-siblings)."""
+    df = spark.range(4000).select(
+        (F.col("id") % 50).alias("a"), F.col("id").alias("b"), F.col("id").alias("v")
+    )
+    pair = ReconPair(df, df, ["a", "b"], {"v": "int"})
+    rows = {r.status: r.n_keys for r in pair.sample_audit("0").collect()}
+    sampled = (
+        df.filter(F.substring(F.md5(F.col("a").cast("string")), 1, 1) == "0")
+        .select("a", "b")
+        .distinct()
+        .count()
+    )
+    assert sampled > 0
+    assert rows == {"MATCH": sampled}

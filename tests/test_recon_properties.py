@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from reconciliation_hive_data_spark.catalog import load
 from reconciliation_hive_data_spark.plans import recon
+from reconciliation_hive_data_spark.plans.api import orders_pair
 from reconciliation_hive_data_spark.canonical import money_sum
 
 
@@ -33,21 +34,14 @@ def expected_fault_keys(orders, residue: int) -> set[int]:
 
 
 def test_self_recon_rowcount_clean(spark, sf_dir, orders):
-    tgt = recon.orders_target(orders, faulty=False)
-    s = orders.groupBy("o_orderstatus").agg(F.count("*").alias("src_cnt"))
-    t = tgt.groupBy("o_orderstatus").agg(F.count("*").alias("tgt_cnt"))
-    j = s.join(t, "o_orderstatus", "full_outer")
-    bad = j.filter(F.col("src_cnt") != F.col("tgt_cnt")).count()
-    assert bad == 0
+    out = orders_pair(orders, orders).row_counts("o_orderstatus")
+    assert out.count() > 0
+    assert out.filter(F.col("diff") != 0).count() == 0
+    assert out.filter(F.col("status") != "MATCH").count() == 0
 
 
 def test_self_recon_rowhash_clean(spark, sf_dir, orders):
-    from reconciliation_hive_data_spark.canonical import canonical_row_hash
-    from reconciliation_hive_data_spark.plans.recon import _ORDER_HASH_COLS
-
-    h = orders.select("o_orderkey", canonical_row_hash(_ORDER_HASH_COLS).alias("h"))
-    j = h.alias("a").join(h.alias("b"), "o_orderkey")
-    assert j.filter(F.col("a.h") != F.col("b.h")).count() == 0
+    assert orders_pair(orders, orders).row_hash_diff().count() == 0
 
 
 def test_injected_missing_keys_exact(spark, sf_dir, orders):

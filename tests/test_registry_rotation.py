@@ -26,7 +26,16 @@ STALE = "0" * 32
 
 #: Queries whose plans changed after their latest CORRECTNESS row: their
 #: code fingerprint differs from the one ORACLE_SNAPSHOT.json attests.
-QUEUED_BY_CODE = ["recon_api_summary", "recon_crossformat", "udtf_apply"]
+QUEUED_BY_CODE = [
+    "recon_rowcount",
+    "recon_keys_missing",
+    "recon_keys_dup",
+    "recon_rowhash",
+    "recon_sample_audit",
+    "recon_api_summary",
+    "recon_crossformat",
+    "udtf_apply",
+]
 
 
 def _current_snapshot(rnd: int = 5) -> dict[str, dict]:
@@ -207,9 +216,10 @@ def test_show_rotation_lists_queued_rewrites_first():
         capture_output=True, text=True, timeout=120, check=True,
     ).stdout
     rows = [line.split() for line in out.splitlines() if re.match(r"\s+\d+\s", line)]
-    assert [r[1] for r in rows[:3]] == QUEUED_BY_CODE
-    assert all(r[2].endswith("+CHANGED(code)") for r in rows[:3])
-    assert not any("CHANGED" in r[2] for r in rows[3:])
+    n = len(QUEUED_BY_CODE)
+    assert [r[1] for r in rows[:n]] == QUEUED_BY_CODE
+    assert all(r[2].endswith("+CHANGED(code)") for r in rows[:n])
+    assert not any("CHANGED" in r[2] for r in rows[n:])
 
 
 # ---------------------------------------------------------------------------

@@ -202,39 +202,18 @@ _SUMMARY_CHECKS = [
     "fingerprint_diffs",
 ]
 
-_ORDERS_COMPARE = {
-    "o_custkey": "int",
-    "o_orderstatus": "string",
-    "o_totalprice": "double",
-    "o_orderdate": "ts",
-    "o_orderpriority": "string",
-}
+def _pair(spark, src_rows, tgt_rows):
+    from reconciliation_hive_data_spark.plans.api import orders_pair
 
-
-def _pair(spark, src_rows, tgt_rows, tolerance=0.5):
-    from reconciliation_hive_data_spark.plans.api import ReconPair
-
-    return ReconPair(
-        source=_frame(spark, src_rows),
-        target=_frame(spark, tgt_rows),
-        keys=["o_orderkey"],
-        compare_cols=dict(_ORDERS_COMPARE),
-        tolerance=tolerance,
-    )
+    return orders_pair(_frame(spark, src_rows), _frame(spark, tgt_rows))
 
 
 def test_summary_fused_matches_unfused_on_fixture(spark, sf_dir):
-    from reconciliation_hive_data_spark.plans.api import ReconPair
+    from reconciliation_hive_data_spark.plans.api import orders_pair
 
     orders = load(spark, sf_dir, "orders")
-    mk = lambda: ReconPair(  # noqa: E731 - fresh pair per pass (summary persists)
-        source=orders,
-        target=orders_target(orders, faulty=True),
-        keys=["o_orderkey"],
-        compare_cols=dict(_ORDERS_COMPARE),
-        tolerance=0.5,
-    )
-    assert _fused_summary_counts(mk()) == _unfused_summary_counts(mk())
+    pair = orders_pair(orders, orders_target(orders, faulty=True))
+    assert _fused_summary_counts(pair) == _unfused_summary_counts(pair)
 
 
 def test_summary_fused_matches_unfused_on_hostile_pair(spark):
@@ -268,6 +247,16 @@ def test_summary_fused_matches_unfused_on_hostile_pair(spark):
     assert got == want
     # sanity: the hostile pair actually exercises every check
     assert all(want[c] > 0 for c in _SUMMARY_CHECKS)
+    # a NULL key never joins: each side's NULL key is missing on the OTHER
+    # side, labelled by where it occurs (not by the NULL itself)
+    sides = [(r.o_orderkey, r.side) for r in _pair(spark, src, tgt).key_diff().collect()]
+    assert len(sides) == 4
+    assert set(sides) == {
+        (None, "MISSING_IN_TARGET"),
+        (None, "MISSING_IN_SOURCE"),
+        (7, "MISSING_IN_TARGET"),
+        (9, "MISSING_IN_SOURCE"),
+    }
 
 
 def test_summary_fused_empty_sides_all_match(spark):
